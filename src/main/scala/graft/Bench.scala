@@ -30,21 +30,21 @@ object Bench {
     * version (v2 = 64 M cpu rows + min-of-n pinning). */
   private val ProbeVer = 2
 
-  private[graft] def cpuProbeOnce(spark: SparkSession): Double = {
+  private def cpuProbeOnce(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions.{sum, xxhash64, col, lit, pmod}
     val t0 = System.nanoTime()
     // pmod bounds the addends so the sum can't overflow a long under
     // ANSI mode; the hash still dominates the cost. 64 M rows: at 8 M
     // the probe ran ~0.1 s and per-task scheduling jitter was ±2× of
     // the signal, and 32 M was still overhead-dominated (~0.14 s vs
-    // 0.10 — measured via ProbeTrace); at 64 M compute dominates and
-    // the min-of-n envelope tightens to ~±10%.
+    // 0.10 over 15 consecutive cold-JVM runs); at 64 M compute
+    // dominates and the min-of-n envelope tightens to ~±10%.
     spark.range(0L, 64L * 1000 * 1000, 1L, 32)
       .select(sum(pmod(xxhash64(col("id")), lit(1000000L)))).head()
     (System.nanoTime() - t0) / 1e9
   }
 
-  private[graft] def shuffleProbeOnce(spark: SparkSession): Double = {
+  private def shuffleProbeOnce(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions.{sum, count, max, xxhash64, col, lit, pmod, lpad, length}
     val t0 = System.nanoTime()
     // A real exchange that MOVES BYTES: 1 M rows carrying a 48-char
@@ -92,17 +92,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session (scheduler, codegen compiler, parquet footer
-    // reader) so the first timed query measures the query, not JVM init.
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val spark = Harness.session()
+    // Warm the parquet footer reader too, so the first timed query
+    // measures the query, not JVM init.
     spark.read.parquet(s"$sfDir/region.parquet").count()
     // Warm the probes too — until two consecutive runs of each agree
     // within 25% (cap 10), so the first reading measures load, not JIT

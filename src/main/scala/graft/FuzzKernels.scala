@@ -2,7 +2,6 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{JaroWinkler, SparseDotLong}
 
@@ -26,13 +25,7 @@ object FuzzKernels {
     val outDir = args.headOption.getOrElse("/tmp/fuzz_kernels")
     val n = args.lift(1).map(_.toInt).getOrElse(100000)
     val seed = args.lift(2).map(_.toLong).getOrElse(20260815L)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
 
     val rnd = new Random(seed)

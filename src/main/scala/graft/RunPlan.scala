@@ -1,6 +1,7 @@
 package graft
 
 import graft.engine._
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** CLI entrypoint: run a JSON plan end-to-end, as the reference's
@@ -106,19 +107,26 @@ object RunPlan {
     }
   }
 
+  /** The master to set on the builder: none when `spark.master` is
+    * already configured (spark-submit's `--master`, `-Dspark.master`),
+    * since a builder master would override it; otherwise `local[*]`, so
+    * `sbt runMain` works out of the box. */
+  private[graft] def defaultMaster(conf: SparkConf): Option[String] =
+    if (conf.contains("spark.master")) None else Some("local[*]")
+
   def main(args: Array[String]): Unit =
     parseArgs(args.toSeq) match {
       case Left(err) =>
         System.err.println(s"graft.RunPlan: $err")
         sys.exit(2)
       case Right(config) =>
-        // master comes from spark-submit in production; default local
-        // so `sbt runMain` works out of the box.
-        val spark = SparkSession.builder()
+        val builder = SparkSession.builder()
           .appName("graft")
           .config("spark.ui.enabled", "false")
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .getOrCreate()
+        val spark = defaultMaster(new SparkConf())
+          .fold(builder)(builder.master).getOrCreate()
+        System.err.println(
+          s"graft.RunPlan: master ${spark.sparkContext.master}")
         // sys.exit halts the JVM before a finally around it could run —
         // compute the code first, stop the session, THEN exit.
         val code = try run(spark, config) finally spark.stop()

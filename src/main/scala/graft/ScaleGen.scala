@@ -111,13 +111,7 @@ object ScaleGen {
         else (args(3).stripPrefix("zipf=").toDouble, 0.0)
       } else (0.0, 0.0)
     require(mult >= 1, s"multiplier must be >= 1, got $mult")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Seq("spark.sql.shuffle.partitions" -> "32"))
     generate(spark, src, out, mult, zipfS, vocabZipfS)
     spark.stop()
   }

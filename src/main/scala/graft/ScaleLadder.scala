@@ -1,10 +1,5 @@
 package graft
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Empirical scale ladder: run the heavy operators against a sequence
   * of scale-factor directories (driver sf0.1 plus ScaleGen's sf1/sf4)
   * and record wall time + measured shuffle/spill per (query, SF). The
@@ -13,13 +8,14 @@ import org.apache.spark.sql.SparkSession
   *
   * Method notes:
   *  - each (query, SF) runs `iterations` times, min taken — same noise
-  *    discipline as Bench (shared host, ±35%% ambient swings measured).
+  *    discipline as Bench (shared host, ±35%% ambient swings measured);
+  *    a failed iteration never discards a successful one.
   *  - one SparkSession serves the whole ladder so JVM/codegen warmup
   *    amortizes identically across SFs; queries run in name order
   *    within each SF, SFs smallest-first (warm → the LARGE runs, which
   *    decide the verdict, are the best-measured ones).
-  *  - stage metrics attribute via a drained listener (CostAudit's
-  *    pattern); the recorded metrics come from the LAST iteration so
+  *  - stage metrics attribute via [[StageCollector]]; the recorded
+  *    metrics come from the LAST successful iteration so
   *    cached-relation warmup jobs from iteration 1 don't inflate them.
   *
   * Run: `sbt "runMain graft.ScaleLadder sf0.1=/root/testdata/sf0.1 \
@@ -59,15 +55,8 @@ object ScaleLadder {
     // operators: TopKPerKey whole-operator, salted skew join
     "qo_topk", "qo_skew_join")
 
-  private case class StageCost(shuffleRead: Long, shuffleWrite: Long,
-      input: Long, memSpill: Long, diskSpill: Long, runTimeMs: Long)
-
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: ScaleLadder <label>=<dir> ...")
-    val ladder = args.toSeq.map { a =>
-      val Array(label, dir) = a.split("=", 2)
-      (label, dir)
-    }
+    val ladder = Harness.labelDirs(args.toSeq, "ScaleLadder <label>=<dir> ...")
     val names = sys.env.get("SPARK_GRAFT_LADDER_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(DefaultQueries)
@@ -78,109 +67,34 @@ object ScaleLadder {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_LADDER_OUT",
       "SCALING_RAW.jsonl")
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    val current = new mutable.ArrayBuffer[StageCost]()
-    // Per-TASK run times alongside the per-stage totals: the skew rung's
-    // verdict is a straggler question — a hot key shows up as max-task ≫
-    // median-task long before it shows up in wall time (31 other cores
-    // hide one straggler on this box; a real cluster's stage does not).
-    val taskMs = new mutable.ArrayBuffer[Long]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) current.synchronized {
-          current += StageCost(
-            m.shuffleReadMetrics.totalBytesRead,
-            m.shuffleWriteMetrics.bytesWritten,
-            m.inputMetrics.bytesRead,
-            m.memoryBytesSpilled, m.diskBytesSpilled,
-            m.executorRunTime)
-        }
-      }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) taskMs.synchronized { taskMs += m.executorRunTime }
-      }
-    })
+    val spark = Harness.session()
+    // Per-TASK run times ride alongside the per-stage totals: the skew
+    // rung's verdict is a straggler question (other cores hide one
+    // straggler in a local run; a real cluster's stage does not).
+    val collector = new StageCollector(spark.sparkContext)
 
     def ms(v: Double): String = JsonFmt.ms(v)
-    val out = new java.io.PrintWriter(new java.io.FileWriter(outPath, true))
-    try {
-      for ((label, dir) <- ladder) {
-        for (name <- names.sorted) {
-          val fn = SparkEntry.queries(name)
-          var best = Double.MaxValue
-          var rows = 0L
-          var lastCost: Seq[StageCost] = Nil
-          var lastTasks: Seq[Long] = Nil
-          var error: Option[String] = None
-          var it = 0
-          // No early break on failure: a transient iteration-1 error
-          // (e.g. an ambient OOM on this shared host) must not discard
-          // the whole (query, SF) cell when iteration 2 would succeed.
-          // The error is kept only if NO iteration measured.
-          while (it < iterations) {
-            current.synchronized(current.clear())
-            taskMs.synchronized(taskMs.clear())
-            val t0 = System.nanoTime()
-            try {
-              rows = Force.rows(fn(spark, dir))
-              val t = (System.nanoTime() - t0) / 1e9
-              if (t < best) best = t
-              org.apache.spark.graft.ListenerBusAccess.drain(spark.sparkContext)
-              lastCost = current.synchronized(current.toSeq)
-              lastTasks = taskMs.synchronized(taskMs.toSeq)
-            } catch { case e: Throwable =>
-              error = Some(JsonFmt.err(e))
-            }
-            // Outside the timed region: drop the previous query's dead
-            // localCheckpoint blocks. ContextCleaner frees them only
-            // after the driver GCs the owning RDD objects, so without
-            // this a spill-heavy query inherits the block-manager
-            // pressure of whatever ran before it (measured: +90% wall
-            // on qd_tfidf_pairs at sf1 purely from queue position).
-            System.gc()
-            it += 1
-          }
-          // A transient later-iteration failure must not discard an
-          // already-successful measurement: the error line is emitted
-          // only when NO iteration produced a result (same keep-the-
-          // good-run discipline as Bench).
-          val line = error.filter(_ => best == Double.MaxValue) match {
-            case Some(msg) =>
-              // "force":"full" on the error line too: scaling_table.py
-              // filters raw records on that field, and an error line
-              // without it would be dropped BEFORE last-wins — letting
-              // an older success mask the newest run's crash.
-              s"""{"sf":"$label","query":"$name","error":"$msg","force":"full"}"""
-            case None =>
-              val sw = lastCost.map(_.shuffleWrite).sum
-              val sr = lastCost.map(_.shuffleRead).sum
-              val in = lastCost.map(_.input).sum
-              val sp = lastCost.map(c => c.memSpill + c.diskSpill).sum
-              val rt = lastCost.map(_.runTimeMs).sum
-              val sortedTasks = lastTasks.sorted
-              val maxTask = if (sortedTasks.isEmpty) 0L else sortedTasks.last
-              val medTask =
-                if (sortedTasks.isEmpty) 0L
-                else sortedTasks(sortedTasks.size / 2)
-              s"""{"sf":"$label","query":"$name","sec":${ms(best)},"rows":$rows,"input_mb":${ms(in / 1048576.0)},"shuffle_write_mb":${ms(sw / 1048576.0)},"shuffle_read_mb":${ms(sr / 1048576.0)},"spill_mb":${ms(sp / 1048576.0)},"task_ms":$rt,"n_tasks":${sortedTasks.size},"max_task_ms":$maxTask,"med_task_ms":$medTask,"force":"full"}"""
-          }
-          println(line)
-          out.println(line)
-          out.flush()
+    def mb(b: Long): String = ms(b / 1048576.0)
+    Harness.appendJsonl(outPath) { emit =>
+      for ((label, dir) <- ladder; name <- names.sorted) {
+        val fn = SparkEntry.queries(name)
+        val cell = Harness.minOfN(iterations) {
+          val w = collector.window(Force.rows(fn(spark, dir)))
+          (w.sec, w)
         }
+        emit(cell match {
+          case Left(e) =>
+            // "force":"full" on the error line too: scaling_table.py
+            // filters raw records on that field, and an error line
+            // without it would be dropped BEFORE last-wins — letting
+            // an older success mask the newest run's crash.
+            s"""{"sf":"$label","query":"$name","error":"${JsonFmt.err(e)}","force":"full"}"""
+          case Right((best, w)) =>
+            val (maxTask, medTask) = w.maxMedianTaskMs
+            s"""{"sf":"$label","query":"$name","sec":${ms(best)},"rows":${w.value},"input_mb":${mb(w.total(_.inputBytes))},"shuffle_write_mb":${mb(w.total(_.shuffleWriteBytes))},"shuffle_read_mb":${mb(w.total(_.shuffleReadBytes))},"spill_mb":${mb(w.total(_.spillBytes))},"task_ms":${w.total(_.runMs)},"n_tasks":${w.taskRunMs.size},"max_task_ms":$maxTask,"med_task_ms":$medTask,"force":"full"}"""
+        })
       }
-    } finally out.close()
+    }
     spark.stop()
   }
 }

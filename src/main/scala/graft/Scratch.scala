@@ -1,38 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan/perf inspection main (not part of the driver contract):
-  * `sbt "runMain graft.Scratch <queryName>"` prints the formatted
-  * physical plan and three timed runs (run 1 ≈ cold codegen, runs 2-3 ≈
-  * steady state) at SPARK_GRAFT_SF_DIR (default sf0.1).
+  * `sbt "runMain graft.Scratch <queryName>"` prints three timed runs
+  * (run 1 ≈ cold codegen, runs 2-3 ≈ steady state) at
+  * SPARK_GRAFT_SF_DIR (default sf0.1). SPARK_GRAFT_EXPLAIN=1 prints the
+  * formatted physical plan first; SPARK_GRAFT_EXPLAIN=executed prints
+  * the plan after execution instead.
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_REBALANCE")
-      .foreach(m => spark.conf.set("spark.graft.rebalance", m))
-    sys.env.get("SPARK_GRAFT_AQE_COALESCE").foreach { v =>
-      spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", v)
-    }
-    // Generic conf passthrough (ClusterSmoke's pattern):
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — e.g. forcing a broadcast
-    // gate while bisecting a join-path decision.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .foreach(_.split(";").filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
+    val spark = Harness.session()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (args.nonEmpty) args.toSeq else Seq("q1_pricing")
-    val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
+    val explain = sys.env.get("SPARK_GRAFT_EXPLAIN")
     for (name <- names) {
       // In-session conf toggle ("conf:key=value" / "unset:key" tokens):
       // lets an A/B of two plan shapes run INTERLEAVED in one JVM — the
@@ -50,10 +30,11 @@ object Scratch {
         spark.conf.unset(name.stripPrefix("unset:"))
         println(s"[scratch] unset ${name.stripPrefix("unset:")}")
       } else {
-      if (explain) SparkEntry.queries(name)(spark, dir).explain("formatted")
+      if (explain.contains("1"))
+        SparkEntry.queries(name)(spark, dir).explain("formatted")
       // Post-execution plan: AQE finalizes reuse/broadcast decisions at
       // runtime, so ReusedExchange/ReusedSubquery only show here.
-      if (sys.env.get("SPARK_GRAFT_EXPLAIN_EXECUTED").contains("1")) {
+      if (explain.contains("executed")) {
         val df = SparkEntry.queries(name)(spark, dir)
         // collect(), not count(): count() wraps a NEW QueryExecution,
         // leaving df's own adaptive plan unexecuted (isFinalPlan=false).
@@ -63,10 +44,9 @@ object Scratch {
       // Construct INSIDE the timed region (as Bench does): iterative
       // operators (connectedComponents) run their jobs at construction.
       for (i <- 1 to 3) {
-        val t0 = System.nanoTime()
-        val n = Force.rows(SparkEntry.queries(name)(spark, dir))
-        println(s"[scratch] $name run $i: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.3fs rows=$n")
+        val (sec, n) =
+          Harness.timed(Force.rows(SparkEntry.queries(name)(spark, dir)))
+        println(f"[scratch] $name run $i: $sec%.3fs rows=$n")
       }
       }
     }

@@ -1,9 +1,6 @@
 package graft
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Straggler probe: the before/after-salting evidence on genuinely
@@ -54,30 +51,12 @@ import org.apache.spark.sql.functions._
 object SkewProbe {
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: SkewProbe <label>=<dir> ...")
-    val ladder = args.toSeq.map { a =>
-      val Array(label, dir) = a.split("=", 2)
-      (label, dir)
-    }
+    val ladder = Harness.labelDirs(args.toSeq, "SkewProbe <label>=<dir> ...")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_LADDER_OUT",
       "SKEW_RAW.jsonl")
     val iterations = sys.env.getOrElse("SPARK_GRAFT_LADDER_ITERS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val taskMs = new mutable.ArrayBuffer[Long]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) taskMs.synchronized { taskMs += m.executorRunTime }
-      }
-    })
+    val spark = Harness.session()
+    val collector = new StageCollector(spark.sparkContext)
 
     // The identical logical query of qo_skew_join/qo_skew_join_plain:
     // per-nation item count + price sum over lineitem⋈supplier.
@@ -113,9 +92,7 @@ object SkewProbe {
       "salted" -> (() => aggregate(graft.operators.SkewJoin
         .saltedJoin(big(dir), small(dir), "suppkey", saltFactor = 8))))
 
-    val out = new java.io.PrintWriter(new java.io.FileWriter(outPath, true))
-    def emit(l: String): Unit = { println(l); out.println(l); out.flush() }
-    try {
+    Harness.appendJsonl(outPath) { emit =>
       for ((label, dir) <- ladder) {
         var referenceHash: Option[String] = None
         for ((leg, mk) <- legs(dir)) {
@@ -138,41 +115,26 @@ object SkewProbe {
             spark.conf.unset(
               "spark.sql.adaptive.advisoryPartitionSizeInBytes")
           }
-          var best = Double.MaxValue
-          var lastTasks: Seq[Long] = Nil
-          var hash = ""
-          var error: Option[String] = None
-          for (_ <- 1 to iterations) {
-            taskMs.synchronized(taskMs.clear())
-            val t0 = System.nanoTime()
-            try {
-              val rows = mk().collect()
-              val sec = (System.nanoTime() - t0) / 1e9
-              val ints: Array[Int] = rows.map(_.toString.hashCode)
-              hash = java.util.Arrays.hashCode(ints).toHexString
-              if (sec < best) best = sec
-              org.apache.spark.graft.ListenerBusAccess
-                .drain(spark.sparkContext)
-              lastTasks = taskMs.synchronized(taskMs.toSeq)
-            } catch { case e: Throwable => error = Some(JsonFmt.err(e)) }
+          val cell = Harness.minOfN(iterations) {
+            val w = collector.window(mk().collect())
+            val ints: Array[Int] = w.value.map(_.toString.hashCode)
+            (w.sec, (java.util.Arrays.hashCode(ints).toHexString, w))
           }
-          error.filter(_ => best == Double.MaxValue) match {
-            case Some(msg) =>
-              emit(s"""{"sf":"$label","query":"skewprobe_$leg","error":"$msg","force":"full"}""")
-            case None =>
+          cell match {
+            case Left(e) =>
+              emit(s"""{"sf":"$label","query":"skewprobe_$leg","error":"${JsonFmt.err(e)}","force":"full"}""")
+            case Right((best, (hash, w))) =>
               referenceHash match {
                 case None => referenceHash = Some(hash)
                 case Some(h) => require(h == hash,
                   s"leg $leg result hash $hash != reference $h — a leg computed something else")
               }
-              val sorted = lastTasks.sorted
-              val maxT = if (sorted.isEmpty) 0L else sorted.last
-              val medT = if (sorted.isEmpty) 0L else sorted(sorted.size / 2)
-              emit(s"""{"sf":"$label","query":"skewprobe_$leg","sec":${JsonFmt.ms(best)},"n_tasks":${sorted.size},"max_task_ms":$maxT,"med_task_ms":$medT,"result_hash":"$hash","force":"full"}""")
+              val (maxT, medT) = w.maxMedianTaskMs
+              emit(s"""{"sf":"$label","query":"skewprobe_$leg","sec":${JsonFmt.ms(best)},"n_tasks":${w.taskRunMs.size},"max_task_ms":$maxT,"med_task_ms":$medT,"result_hash":"$hash","force":"full"}""")
           }
         }
       }
-    } finally out.close()
+    }
     spark.stop()
   }
 }

@@ -1,115 +1,87 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
-/** Per-stage breakdown of one or more contract queries (not part of
-  * the driver contract) — the measurement tool behind the r14
-  * optimization round: for each named query, runs it once cold and
-  * once profiled, and prints every stage of the profiled run with its
-  * wall time, summed task time, shuffle read/write bytes and record
-  * counts, grouped by job. This is the "which exchange is the money
-  * going to" view the Spark UI would give if it were enabled.
+/** Per-stage breakdown of contract queries (not part of the driver
+  * contract) — the measurement tool behind the r14 optimization round:
+  * for each named query, runs it once cold and once profiled, and
+  * prints every stage of the profiled run with its wall time, summed
+  * task time, shuffle read/write bytes and record counts, grouped by
+  * job. This is the "which exchange is the money going to" view the
+  * Spark UI would give if it were enabled.
   *
-  * Run: `sbt "runMain graft.StageProfile <query> [query...]"`,
-  * SPARK_GRAFT_SF_DIR selects the data (default sf0.1).
+  * `--summary` is the runtime cost sweep: one run per query and one
+  * line per query (sorted by shuffle write, descending) with MEASURED
+  * input, shuffle volume, spill and task time, plus totals — the
+  * numbers that decide whether a plan survives a 100× scale-up
+  * (PlanAudit checks plan SHAPE; this checks what the shapes actually
+  * move). A query whose shuffle write exceeds its input scan is
+  * repartitioning more than it reads. Any memory/disk spill exits 1,
+  * because spill at sf0.1 means certain spill at sf100.
+  *
+  * Run: `sbt "runMain graft.StageProfile [--summary] [query...]"`; no
+  * query names means every contract query. SPARK_GRAFT_SF_DIR selects
+  * the data (default sf0.1).
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .foreach(_.split(";").filter(_.nonEmpty).foreach { kv =>
-        require(kv.contains("="), s"bad SPARK_GRAFT_EXTRA_CONF entry: $kv")
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
+    val summary = args.contains("--summary")
+    val named = args.filterNot(_ == "--summary").toSeq
+    val names =
+      if (named.nonEmpty) named else SparkEntry.queries.keys.toSeq.sorted
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    case class StageRow(jobId: Int, stageId: Int, name: String,
-      wallMs: Long, taskMs: Long, gcMs: Long, shufReadMB: Double,
-      shufWriteMB: Double, inputMB: Double, recIn: Long, recOut: Long,
-      tasks: Int)
-    val stages = scala.collection.mutable.ArrayBuffer.empty[StageRow]
-    val jobOfStage = scala.collection.mutable.Map.empty[Int, Int]
-    val jobDesc = scala.collection.mutable.Map.empty[Int, String]
-    @volatile var capturing = false
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        if (capturing) {
-          js.stageIds.foreach(sid => jobOfStage(sid) = js.jobId)
-          jobDesc(js.jobId) = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("")
+    val spark = Harness.session()
+    val collector = new StageCollector(spark.sparkContext)
+    def profiled(name: String) =
+      collector.window(Force.rows(SparkEntry.queries(name)(spark, dir)))
+    val spilled =
+      if (summary) costSummary(names.map(name => name -> profiled(name)))
+      else {
+        for (name <- names) {
+          // Cold run: codegen + JIT, unprofiled.
+          val (cold, _) =
+            Harness.timed(Force.rows(SparkEntry.queries(name)(spark, dir)))
+          // Profiled steady-state run.
+          val w = profiled(name)
+          println(f"%n==== $name: cold=$cold%.2fs warm=${w.sec}%.2fs rows=${w.value} ====")
+          printStages(w)
         }
+        0
       }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        if (capturing) {
-          val si = sc.stageInfo
-          val m = si.taskMetrics
-          stages += StageRow(
-            jobOfStage.getOrElse(si.stageId, -1), si.stageId,
-            si.name.linesIterator.next(),
-            (for (a <- si.completionTime; b <- si.submissionTime) yield a - b)
-              .getOrElse(-1L),
-            m.executorRunTime,
-            m.jvmGCTime,
-            m.shuffleReadMetrics.totalBytesRead / 1e6,
-            m.shuffleWriteMetrics.bytesWritten / 1e6,
-            m.inputMetrics.bytesRead / 1e6,
-            // Input records: file-scan rows OR shuffle-read rows,
-            // whichever path feeds this stage (both zero only when the
-            // stage sources a cached/checkpointed RDD). Output records:
-            // sink rows or shuffle-write rows. Kept separate — the old
-            // single max() column conflated them.
-            m.inputMetrics.recordsRead max
-              m.shuffleReadMetrics.recordsRead,
-            m.outputMetrics.recordsWritten max
-              m.shuffleWriteMetrics.recordsWritten,
-            si.numTasks)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    for (name <- args) {
-      val fn = SparkEntry.queries(name)
-      // Cold run: codegen + JIT, unprofiled.
-      val t0 = System.nanoTime()
-      Force.rows(fn(spark, dir))
-      val cold = (System.nanoTime() - t0) / 1e9
-      // Profiled steady-state run.
-      stages.clear(); jobOfStage.clear(); jobDesc.clear()
-      capturing = true
-      val t1 = System.nanoTime()
-      val rows = Force.rows(fn(spark, dir))
-      val warm = (System.nanoTime() - t1) / 1e9
-      // Listener bus is async; give it a beat to drain.
-      Thread.sleep(500)
-      capturing = false
-      println(f"%n==== $name: cold=$cold%.2fs warm=$warm%.2fs rows=$rows ====")
-      val byJob = stages.toSeq.groupBy(_.jobId).toSeq.sortBy(_._1)
-      for ((jid, ss) <- byJob) {
-        val desc = jobDesc.getOrElse(jid, "")
-        println(f"-- job $jid%3d  wall=${ss.map(_.wallMs).sum}%6d ms  " +
-          f"task=${ss.map(_.taskMs).sum}%7d ms  $desc")
-        for (s <- ss.sortBy(-_.taskMs)) {
-          println(f"   stage ${s.stageId}%4d task=${s.taskMs}%7d ms " +
-            f"gc=${s.gcMs}%6d ms " +
-            f"wall=${s.wallMs}%6d ms sr=${s.shufReadMB}%8.1fMB " +
-            f"sw=${s.shufWriteMB}%8.1fMB in=${s.inputMB}%7.1fMB " +
-            f"rIn=${s.recIn}%9d rOut=${s.recOut}%9d t=${s.tasks}%3d  " +
-            s.name.take(90))
-        }
-      }
-    }
     spark.stop()
+    if (spilled > 0) sys.exit(1)
+  }
+
+  private def printStages(w: StageWindow[_]): Unit = {
+    def mb(b: Long): Double = b / 1e6
+    for ((jid, ss) <- w.stages.groupBy(_.jobId).toSeq.sortBy(_._1)) {
+      val desc = w.jobDescriptions.getOrElse(jid, "")
+      println(f"-- job $jid%3d  wall=${ss.map(_.wallMs).sum}%6d ms  " +
+        f"task=${ss.map(_.runMs).sum}%7d ms  $desc")
+      for (s <- ss.sortBy(-_.runMs)) {
+        println(f"   stage ${s.stageId}%4d task=${s.runMs}%7d ms " +
+          f"gc=${s.gcMs}%6d ms " +
+          f"wall=${s.wallMs}%6d ms sr=${mb(s.shuffleReadBytes)}%8.1fMB " +
+          f"sw=${mb(s.shuffleWriteBytes)}%8.1fMB in=${mb(s.inputBytes)}%7.1fMB " +
+          f"rIn=${s.recordsIn}%9d rOut=${s.recordsOut}%9d t=${s.tasks}%3d  " +
+          s.name.take(90))
+      }
+    }
+  }
+
+  /** Prints the `--summary` table; returns the number of queries that
+    * spilled. */
+  private def costSummary(runs: Seq[(String, StageWindow[Long])]): Int = {
+    def mb(b: Long): String = f"${b / 1048576.0}%9.1f"
+    println(f"${"query"}%-22s ${"rows"}%9s ${"input MB"}%9s ${"shufW MB"}%9s ${"shufR MB"}%9s ${"spill MB"}%9s ${"task ms"}%9s")
+    runs.sortBy(-_._2.total(_.shuffleWriteBytes)).foreach { case (name, w) =>
+      val spill = w.total(_.spillBytes)
+      val mark = if (spill > 0) "  <-- SPILL" else ""
+      println(f"$name%-22s ${w.value}%9d ${mb(w.total(_.inputBytes))} ${mb(w.total(_.shuffleWriteBytes))} ${mb(w.total(_.shuffleReadBytes))} ${mb(spill)} ${w.total(_.runMs)}%9d$mark")
+    }
+    val totShufW = runs.map(_._2.total(_.shuffleWriteBytes)).sum
+    val totInput = runs.map(_._2.total(_.inputBytes)).sum
+    val spilled = runs.count(_._2.total(_.spillBytes) > 0)
+    println(f"TOTAL input ${totInput / 1048576.0}%.1f MB, shuffle write ${totShufW / 1048576.0}%.1f MB " +
+      f"(amplification ${totShufW.toDouble / math.max(totInput, 1)}%.3f), $spilled queries spilled")
+    spilled
   }
 }

@@ -79,11 +79,7 @@ object StreamLadder {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: StreamLadder <label>=<dir> ...")
-    val ladder = args.toSeq.map { a =>
-      val Array(label, d) = a.split("=", 2)
-      (label, d)
-    }
+    val ladder = Harness.labelDirs(args.toSeq, "StreamLadder <label>=<dir> ...")
     val iterations =
       sys.env.getOrElse("SPARK_GRAFT_STREAM_ITERS", "2").toInt
     val filesPerTrigger =
@@ -110,51 +106,25 @@ object StreamLadder {
 
     // SPARK_GRAFT_MASTER=local-cluster[2,8,4096] runs the streaming
     // ladder under real Worker-launched executor JVMs (ClusterSmoke's
-    // pattern — requires SPARK_SCALA_VERSION=2.13 in the environment);
-    // executors then need this repo's classes on their classpath.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER",
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-    val builder00 = SparkSession.builder()
-      .config("spark.sql.streaming.stateStore.providerClass", providerClass)
-      .master(master)
-    // Generic conf passthrough (ClusterSmoke's pattern) for provider
-    // experiments — e.g. RocksDB changelog checkpointing, the knob
-    // that targets the commit-latency premium the telemetry measured:
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2". Confs ride the provider tag
-    // in every record via the `extra_conf` field so experimental rows
-    // never pollute a provider's baseline.
-    val extraConf = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-    val builder0 = extraConf.split(";").filter(_.nonEmpty)
-      .foldLeft(builder00) { (b, kv) =>
-        // A stray token without '=' would otherwise die in the
-        // destructuring bind with an opaque MatchError before any
-        // measurement; name the malformed entry instead.
-        require(kv.contains("="),
-          s"bad SPARK_GRAFT_EXTRA_CONF entry (expected k=v): '$kv'")
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      }
-    val builder =
-      if (master.startsWith("local-cluster"))
-        builder0.config("spark.executor.extraClassPath",
-          new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-      else builder0
-    val spark = builder
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
+    // pattern — requires SPARK_SCALA_VERSION=2.13 in the environment).
+    // SPARK_GRAFT_EXTRA_CONF serves provider experiments — e.g. RocksDB
+    // changelog checkpointing, the knob that targets the commit-latency
+    // premium the telemetry measured; error records carry it in
+    // `extra_conf` so experimental rows never pollute a provider's
+    // baseline.
+    val spark = Harness.session(Seq(
+      "spark.sql.streaming.stateStore.providerClass" -> providerClass,
       // batches/out_rows/state_rows read recentProgress after the run;
       // the default ring buffer keeps 100 progress events, so a
       // >100-micro-batch replay (smaller maxFilesPerTrigger, bigger SF)
       // would silently under-report. 10k covers any run this tool does.
-      .config("spark.sql.streaming.numRecentProgressUpdates", 10000)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.numRecentProgressUpdates" -> "10000"))
+    val master = spark.sparkContext.master
+    val extraConf = Harness.extraConf(sys.env)
+      .map { case (k, v) => s"$k=$v" }.mkString(";")
 
     def ms(v: Double): String = JsonFmt.ms(v)
-    val out = new java.io.PrintWriter(new java.io.FileWriter(outPath, true))
-    try {
+    Harness.appendJsonl(outPath) { emit =>
       for ((label, dir) <- ladder) {
         val (ops, cleanup) = operators(spark, dir)
         for ((name, table, build) <- ops) {
@@ -315,13 +285,11 @@ object StreamLadder {
             case None =>
               s"""{"sf":"$label","stream":"$name","sec":${ms(bestSec)},"rows":$inputRows,"rows_per_sec":${ms(inputRows / bestSec)},"batches":$batches,"out_rows":$outRows,"state_rows":$stateRows,"late_dropped":$lateDropped,"state_dir_mb":${ms(stateDirBytes / 1048576.0)},"commit_ms_avg":${ms(commitMsAvg)},"commit_ms_max":$commitMsMax,"restart_sec":${ms(restartSec)},"restart_batches":$restartBatches,"provider":"$providerTag","master":"$master"}"""
           }
-          println(line)
-          out.println(line)
-          out.flush()
+          emit(line)
         }
         cleanup()
       }
-    } finally out.close()
+    }
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Stage breakdown of qd_tfidf_pairs — the suite's most expensive
   * query (~5% of the whole bench; the only one over 10 s) — at ladder
   * scale, so "is further work worth it" is decided by measurement:
@@ -28,39 +26,15 @@ import org.apache.spark.sql.SparkSession
   */
 object TfidfProfile {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: TfidfProfile <label>=<dir> ...")
-    val ladder = args.toSeq.map { a =>
-      require(a.contains("="), s"bad arg (expected label=dir): '$a'")
-      val Array(label, dir) = a.split("=", 2)
-      (label, dir)
-    }
+    val ladder = Harness.labelDirs(args.toSeq, "TfidfProfile <label>=<dir> ...")
     val iterations = sys.env.getOrElse("SPARK_GRAFT_LADDER_ITERS", "2").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_LADDER_OUT",
       "/tmp/TFIDF_PROFILE.jsonl")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val spark = Harness.session()
 
-    val out = new java.io.PrintWriter(new java.io.FileWriter(outPath, true))
-    def emit(l: String): Unit = { println(l); out.println(l); out.flush() }
-    def timed(mk: () => Long): (Double, Long) = {
-      var best = Double.MaxValue; var rows = 0L
-      for (_ <- 1 to iterations) {
-        val t0 = System.nanoTime()
-        rows = mk()
-        val t = (System.nanoTime() - t0) / 1e9
-        if (t < best) best = t
-        System.gc() // drop dead localCheckpoint blocks between runs
-      }
-      (best, rows)
-    }
-    try {
+    def timed(mk: () => Long): (Double, Long) =
+      Harness.minOfN(iterations)(Harness.timed(mk())).fold(e => throw e, identity)
+    Harness.appendJsonl(outPath) { emit =>
       for ((label, dir) <- ladder) {
         // Fresh frames per timing so Materialize.once caching inside
         // `vec` can't leak one measurement into the next.
@@ -80,7 +54,7 @@ object TfidfProfile {
         emit(s"""{"sf":"$label","query":"tfidf_assembly","sec":${ms(asmSec)},"vec_wall_sec":${ms(vecSec)},"rows":$vecRows,"force":"full"}""")
         emit(s"""{"sf":"$label","query":"tfidf_scoring","sec":${ms(scoreSec)},"full_wall_sec":${ms(fullSec)},"rows":$fullRows,"force":"full"}""")
       }
-    } finally out.close()
+    }
     spark.stop()
   }
 }

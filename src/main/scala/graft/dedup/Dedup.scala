@@ -888,7 +888,7 @@ object Dedup {
     // per-round plan growth genuinely dominates.
     val out = labels.select(col("__id").as(idCol),
       col("__comp").as("component_id"))
-    if (iter >= 8) graft.operators.Materialize.once(out, "cc.labels") else out
+    if (iter >= 8) graft.operators.Materialize.once(out) else out
   }
 
   /** Connected components by alternating large-star / small-star
@@ -947,10 +947,8 @@ object Dedup {
     // rounds stay on disk and the shrunken tail graduates to memory.
     val diskOnlyLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY
     val memLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val memBelowEdges = vertices.sparkSession.conf
-      .get("spark.graft.cc.memRoundsBelowEdges", "1000000").toLong
     def roundLevel(edgesNow: Long) =
-      if (edgesNow < memBelowEdges) memLevel else diskOnlyLevel
+      if (edgesNow < 1000000L) memLevel else diskOnlyLevel
     var e = edges
       .select(greatest(col(ea), col(eb)).as("__hi"),
         least(col(ea), col(eb)).as("__lo"))
@@ -1183,7 +1181,7 @@ object Dedup {
     val und = graft.operators.Materialize.once(
       edges.select(least(col(ea), col(eb)).as("__a"),
           greatest(col(ea), col(eb)).as("__b"))
-        .where(col("__a") =!= col("__b")).distinct(), "pr.und")
+        .where(col("__a") =!= col("__b")).distinct())
     val directed = und.select(col("__a").as("__src"), col("__b").as("__dst"))
       .union(und.select(col("__b").as("__src"), col("__a").as("__dst")))
     val deg = directed.groupBy("__src").agg(count(lit(1)).as("__deg"))

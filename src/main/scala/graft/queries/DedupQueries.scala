@@ -1764,7 +1764,7 @@ object DedupQueries {
     // action classification — without it the md5 scan + canonical
     // join runs twice per manifest evaluation.
     val withEx = graft.operators.Materialize.once(
-      exactC.join(exMin, "__h").select("doc_id", "__exc"), "manifest.ex")
+      exactC.join(exMin, "__h").select("doc_id", "__exc"))
     val survivors = docs.join(
       withEx.where(col("doc_id") === col("__exc")).select("doc_id"),
       Seq("doc_id"), "left_semi")
@@ -1859,8 +1859,7 @@ object DedupQueries {
     // before its one exchange — the 100 TB shape.
     val toks = graft.operators.Materialize.once(docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("__cnt")),
-      "labels.toks")
+      .groupBy("doc_id", "token").agg(count(lit(1)).as("__cnt")))
     val corpus = toks.groupBy("token").agg(sum("__cnt").as("__ct"))
     val corpusTotal = toks.agg(sum("__cnt").as("__N"))
     val clusterToks = toks.join(comp, Seq("doc_id"))

@@ -1540,7 +1540,7 @@ object PipelineQueries {
     graft.operators.Materialize.once(
       dsirTokenized(spark, dir)
         .groupBy("source", "doc_id", "is_target", "bucket")
-        .agg(count(lit(1)).as("cnt")), "dsir.bc")
+        .agg(count(lit(1)).as("cnt")))
 
   /** Shared DSIR bucket model over [[dsirBucketCounts]]'s frame:
     * (bucket, p_t, p_r, lam) for all 256 buckets, add-1 smoothed.
@@ -1661,8 +1661,7 @@ object PipelineQueries {
         .groupBy("source", "doc_id")
         // DECIMAL(10,0) cast: see qpDsir — keeps the product exact.
         .agg(sum(col("lam") * col("cnt").cast("decimal(10,0)")).as("w_dec"))
-        .select(col("doc_id"), col("w_dec").cast("double").as("w")),
-      "dsir.w")
+        .select(col("doc_id"), col("w_dec").cast("double").as("w")))
     val thr = weights.agg(expr("percentile(w, 0.8D)").as("thr"))
     val selDocs = weights.join(broadcast(thr))
       .where(col("w") >= col("thr")).select("doc_id")

@@ -989,7 +989,7 @@ object SimilarityQueries {
     val vecs = graft.operators.Materialize.once(
       emb.join(broadcast(ids), Seq("vec_id"), "left_semi")
         .select(col("vec_id").as("id"), asDoubles(col("embedding")).as("v"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v")))), "mmr.vecs")
+        .withColumn("nrm", sqrt(dot(col("v"), col("v")))))
     val ca = cand.select(col("q_id"), col("id").as("id_a"))
       .join(vecs.select(col("id").as("id_a"), col("v").as("va"),
         col("nrm").as("na")), Seq("id_a"))

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Pins the measurement-forcing contract behind every Bench /
-  * ScaleLadder / CostAudit number: [[Force.rows]] executes the frame's
-  * FULL physical plan. The round-11 incident it guards: `count()`
+  * ScaleLadder / `StageProfile --summary` number: [[Force.rows]]
+  * executes the frame's FULL physical plan. The round-11 incident it guards: `count()`
   * re-optimizes the counting plan, and outer-join elimination over
   * distinct keys let qc_profile's count answer from its 6-row skeleton
   * without running the scan + aggregation at all (0 input bytes

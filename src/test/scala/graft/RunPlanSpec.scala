@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.SparkConf
+
 class RunPlanSpec extends SparkSpec {
 
   private val planJson =
@@ -34,6 +36,14 @@ class RunPlanSpec extends SparkSpec {
     assert(RunPlan.parseArgs(Seq.empty).isLeft)
     assert(RunPlan.parseArgs(Seq("p.json", "--var", "novalue")).isLeft)
     assert(RunPlan.parseArgs(Seq("p.json", "--bogus")).isLeft)
+  }
+
+  test("the builder master defers to a configured spark.master") {
+    // spark-submit --master and -Dspark.master both arrive as the
+    // spark.master property; a builder master would override them.
+    assert(RunPlan.defaultMaster(
+      new SparkConf(false).set("spark.master", "yarn")) === None)
+    assert(RunPlan.defaultMaster(new SparkConf(false)) === Some("local[*]"))
   }
 
   test("--validate-only checks the whole plan and executes nothing") {

@@ -4,7 +4,8 @@
 # against real sf0.1 testdata, and assert the documented exit codes:
 #   corpus_qc_plan.json  -> 0 (all gates pass on the bundled corpus)
 #   orders_qc_plan.json  -> 3 (the 450k bound rule fails BY DESIGN)
-# Also asserts the JSON reports actually land in --report-dest.
+# Also asserts the JSON reports actually land in --report-dest and that
+# the session runs on the master passed as -Dspark.master.
 #
 # Usage: tools/e2e_plan.sh [sfdir]   (default /root/testdata/sf0.1)
 # Requires `sbt compile` to have produced target/scala-2.13/classes.
@@ -23,8 +24,9 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+MASTER="local[8]"
 JAVA_ARGS="$OPENS -Xmx8g -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC -Dspark.master=local[8] \
+  -Dspark.sql.session.timeZone=UTC -Dspark.master=$MASTER \
   -Dspark.sql.shuffle.partitions=8"
 
 mkdir -p "$DEST/logs" "$DEST/reports"
@@ -42,11 +44,18 @@ run_plan() { # plan expected_exit report_key
     tail -5 "$DEST/logs/$key.log"
     return 1
   fi
+  # The -Dspark.master above must reach the session: a master set on
+  # the builder would silently override it (and spark-submit's --master).
+  if ! grep -qxF "graft.RunPlan: master $MASTER" "$DEST/logs/$key.log"; then
+    echo "FAIL $plan: effective master is not $MASTER:" \
+      "$(grep -F 'graft.RunPlan: master' "$DEST/logs/$key.log")"
+    return 1
+  fi
   if ! ls "$DEST/reports"/*"$key"* >/dev/null 2>&1; then
     echo "FAIL $plan: no report written under $DEST/reports for key $key"
     return 1
   fi
-  echo "OK   $plan: exit $got, report present"
+  echo "OK   $plan: exit $got, master $MASTER, report present"
 }
 
 fails=0
